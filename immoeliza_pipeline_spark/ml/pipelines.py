@@ -155,16 +155,18 @@ def randomized_search(df: DataFrame, feature_cols: Sequence[str], target: str,
     chosen = ranked[:n_iter]
     folded = df.withColumn("__fold", F.pmod(F.col(id_col), F.lit(k))).persist()
     best = None
-    for family, params in chosen:
-        fold_rmses = []
-        for fold in range(k):
-            train = folded.filter(F.col("__fold") != fold)
-            test = folded.filter(F.col("__fold") == fold)
-            model = _FITTERS[family](train, feature_cols, target, **params)
-            fold_rmses.append(evaluate(model, test, target)["rmse"])
-        cv_rmse = sum(fold_rmses) / k
-        if best is None or cv_rmse < best["cv_rmse"]:
-            best = {"family": family, "params": params, "cv_rmse": cv_rmse}
-    folded.unpersist()
+    try:
+        for family, params in chosen:
+            fold_rmses = []
+            for fold in range(k):
+                train = folded.filter(F.col("__fold") != fold)
+                test = folded.filter(F.col("__fold") == fold)
+                model = _FITTERS[family](train, feature_cols, target, **params)
+                fold_rmses.append(evaluate(model, test, target)["rmse"])
+            cv_rmse = sum(fold_rmses) / k
+            if best is None or cv_rmse < best["cv_rmse"]:
+                best = {"family": family, "params": params, "cv_rmse": cv_rmse}
+    finally:
+        folded.unpersist()
     final = _FITTERS[best["family"]](df, feature_cols, target, **best["params"])
     return {**best, "model": final}

@@ -5,10 +5,13 @@ sequential DAG (scrape → preprocess → model → publish) on a schedule,
 plus the mission constraints 'datasets need to be versioned / models
 need to be versioned'.
 
-Spark-first difference: stages here pass DataFrames, not files, so a
-chain of stages is ONE Catalyst plan (the reference materializes CSV
-between every step). Materialization happens only at explicitly
-declared versioned sinks.
+Spark-first difference: stages here pass DataFrames, not files (the
+reference materializes CSV between every step). A stage read by two or
+more stages is materialized once per run (persisted, then released when
+the run ends), so its plan executes once and every reader sees the same
+rows. Every other stage stays lazy: a chain of single-reader stages is
+ONE Catalyst plan, executed only by a reader's action or a versioned
+sink.
 """
 
 from __future__ import annotations
@@ -16,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -32,7 +36,13 @@ class Stage:
 @dataclass
 class Pipeline:
     """Topologically-executed DAG of named stages. Each stage fn
-    receives (spark, **upstream results) and returns a DataFrame."""
+    receives (spark, **upstream results) and returns a DataFrame.
+
+    A stage that two or more stages list in ``depends_on`` is persisted
+    when it is produced and unpersisted when ``run`` ends, whether or
+    not a stage raised; the rule comes from the DAG's topology alone.
+    Outputs that are not DataFrames, and streaming DataFrames, pass
+    through untouched. Every other stage stays lazy."""
 
     name: str
     stages: list[Stage] = field(default_factory=list)
@@ -66,10 +76,21 @@ class Pipeline:
         return order
 
     def run(self, spark: SparkSession) -> dict[str, DataFrame]:
+        order = self._topo_order()
+        readers = Counter(dep for s in order for dep in set(s.depends_on))
         results: dict[str, DataFrame] = {}
-        for stage in self._topo_order():
-            inputs = {dep: results[dep] for dep in stage.depends_on}
-            results[stage.name] = stage.fn(spark, **inputs)
+        shared: list[DataFrame] = []
+        try:
+            for stage in order:
+                inputs = {dep: results[dep] for dep in stage.depends_on}
+                out = stage.fn(spark, **inputs)
+                if (readers[stage.name] > 1 and isinstance(out, DataFrame)
+                        and not out.isStreaming):
+                    shared.append(out.persist())
+                results[stage.name] = out
+        finally:
+            for df in shared:
+                df.unpersist()
         return results
 
 
@@ -158,7 +179,8 @@ def dataset_diff(spark: SparkSession, base_dir: str, dataset: str,
 
 def immoeliza_pipeline(sf_dir: str, out_dir: str) -> Pipeline:
     """The reference DAG re-expressed: ingest → preprocess → model →
-    publish, as one lazily-composed plan per branch."""
+    publish. ``preprocess`` feeds model, model_ml and publish, so
+    ``Pipeline.run`` materializes it once; the rest is lazy."""
     from pyspark.sql import functions as F
 
     from immoeliza_pipeline_spark.ml import regression as R

@@ -326,8 +326,11 @@ def _kmeans_sample_threshold(n: int) -> int:
     """16-bit md5-bucket cutoff targeting 256·k training rows.
     Integer-exact cross-engine: k from _ivf_seed_modulus's rule,
     then min(65536, (65536·256·k) // n) — the DuckDB mirror computes
-    the identical value from count(*)."""
+    the identical value from count(*). An empty table keeps all
+    (65536): there is nothing to sample."""
     import math
+    if n == 0:
+        return 65536
     k = max(3, math.ceil(math.sqrt(n) / 4))
     return min(65536, (65536 * _KMEANS_SAMPLE_PER_CELL * k) // n)
 

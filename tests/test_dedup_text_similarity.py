@@ -1,5 +1,7 @@
 """Dedup / text-analysis / similarity queries vs DuckDB at sf0.001."""
 
+import os
+
 import pytest
 
 from immoeliza_pipeline_spark.plans import dedup, similarity, text
@@ -209,6 +211,20 @@ def test_operators_tolerate_empty_input(spark, sf_dir):
     empty_counts = docs.select("doc_id", "lang",
                                F.lit(0).cast("long").alias("n_tokens"))
     assert pack_layout(empty_counts).count() == 0
+
+
+@pytest.mark.parametrize("name", ["kmeans_clusters", "ivf_kmeans_topk"])
+def test_kmeans_queries_on_empty_embeddings(tmp_path, spark, sf_dir, name):
+    """An empty embeddings table gives the oracle's answer (no rows),
+    not a ZeroDivisionError from the training-sample threshold."""
+    import duckdb
+    for f in os.listdir(sf_dir):
+        if f != "embeddings.parquet":
+            os.symlink(os.path.join(sf_dir, f), tmp_path / f)
+    duckdb.execute(f"COPY (SELECT * FROM '{sf_dir}/embeddings.parquet' LIMIT 0)"
+                   f" TO '{tmp_path}/embeddings.parquet' (FORMAT parquet)")
+    fn, sql = similarity.QUERIES[name]
+    assert_matches_oracle(fn(spark, str(tmp_path)), sql, str(tmp_path))
 
 
 def test_embedding_bucketed_pair_recall():

@@ -1,6 +1,7 @@
 """Streaming, multimodal plumbing, and the pipeline DAG."""
 
 import pytest
+from pyspark import StorageLevel
 
 from immoeliza_pipeline_spark.plans import multimodal as mmq
 from immoeliza_pipeline_spark.plans import streamq
@@ -86,8 +87,21 @@ def test_pipeline_dag_runs_and_versions(tmp_path, spark, sf_dir):
     from immoeliza_pipeline_spark.plans.pipeline import (
         immoeliza_pipeline, read_versioned)
     pipe = immoeliza_pipeline(sf_dir, str(tmp_path))
+    levels = {}  # each stage input's storage level, seen inside the run
+    for st in pipe.stages:
+        def fn(spark, _fn=st.fn, _name=st.name, **inputs):
+            for dep, df in inputs.items():
+                levels[(_name, dep)] = df.storageLevel
+            return _fn(spark, **inputs)
+        st.fn = fn
     results = pipe.run(spark)
     assert set(results) == {"ingest", "preprocess", "model", "model_ml", "publish"}
+    # preprocess has three readers: persisted for the run, then released;
+    # ingest, model and model_ml have one reader each and stay lazy
+    assert {k for k, lv in levels.items() if lv != StorageLevel.NONE} == {
+        ("model", "preprocess"), ("model_ml", "preprocess"),
+        ("publish", "preprocess")}
+    assert all(df.storageLevel == StorageLevel.NONE for df in results.values())
     assert results["publish"].first()["status"] == "published"
     clean = read_versioned(spark, str(tmp_path), "orders_clean")
     assert clean.count() == results["ingest"].count()
@@ -158,6 +172,55 @@ def test_dataset_diff_cdc(tmp_path, spark, sf_dir):
     assert counts.get("unchanged", 0) > 0
     total = sum(counts.values())
     assert total == diff.count()
+
+
+def _fanout_pipeline(spark, fail: bool):
+    """source → (left, right) → sink: source has two readers, and each
+    reader counts it; every source row bumps ``acc`` when computed."""
+    from immoeliza_pipeline_spark.plans.pipeline import Pipeline
+    acc = spark.sparkContext.accumulator(0)
+    frames = {}
+
+    def rows(it):
+        for i in it:
+            acc.add(1)
+            yield (i,)
+
+    def source(spark):
+        rdd = spark.sparkContext.parallelize(range(50), 2).mapPartitions(rows)
+        return spark.createDataFrame(rdd, "id long")
+
+    def reader(spark, source):
+        source.count()
+        frames["source"] = source
+        return source.filter("id % 2 = 0")
+
+    def sink(spark, left, right):
+        if fail:
+            raise RuntimeError("sink failed")
+        return left.unionByName(right)
+
+    pipe = (Pipeline("fanout")
+            .add("source", source)
+            .add("left", reader, depends_on=("source",))
+            .add("right", reader, depends_on=("source",))
+            .add("sink", sink, depends_on=("left", "right")))
+    return pipe, acc, frames
+
+
+def test_pipeline_computes_fanout_stage_once(spark):
+    pipe, acc, _ = _fanout_pipeline(spark, fail=False)
+    results = pipe.run(spark)
+    assert acc.value == 50  # two readers counted it, one computation
+    assert all(df.storageLevel == StorageLevel.NONE for df in results.values())
+    assert results["sink"].count() == 50  # still readable after release
+
+
+def test_pipeline_releases_fanout_stage_when_a_stage_raises(spark):
+    pipe, _, frames = _fanout_pipeline(spark, fail=True)
+    with pytest.raises(RuntimeError, match="sink failed"):
+        pipe.run(spark)
+    assert frames["source"].storageLevel == StorageLevel.NONE
 
 
 def test_pipeline_cycle_detection(spark):
