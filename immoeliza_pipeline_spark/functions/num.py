@@ -44,11 +44,6 @@ def avg_money(expr: Column, out_dp: int = 4) -> Column:
                     / (SCALE * F.count(expr)) * so + 0.5) / so)
 
 
-def sum_units(expr: Column) -> Column:
-    """Raw exact integer total (millionths) — for ratios of sums."""
-    return F.sum(exact_units(expr))
-
-
 # ---- oracle-SQL text builders (identical semantics) ----
 
 def sql_exact_units(expr: str) -> str:
@@ -68,7 +63,3 @@ def sql_avg_money(expr: str, out_dp: int = 4) -> str:
     so = 10 ** out_dp
     return (f"(floor(sum({sql_exact_units(expr)})"
             f" / ({SCALE}e0 * count({expr})) * {so} + 0.5) / {so}e0)")
-
-
-def sql_sum_units(expr: str) -> str:
-    return f"sum({sql_exact_units(expr)})"

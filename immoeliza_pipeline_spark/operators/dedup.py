@@ -90,37 +90,29 @@ def jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     counting the FULL shingle table: the Jaccard denominator includes
     a doc's unique shingles.
 
-    The persist sits on the RAW shingle table (r11 optimization
-    pass): previously it sat ABOVE the max_df semi-join, so while the
-    cache was being materialized the guard's doc-frequency aggregation
-    re-executed the whole parquet→tokenize→explode pipeline a second
-    time. The doc-frequency is aggregated over the cached table once;
-    only its REPEATED rows (df ≥ 2) are kept and persisted (r12 pass —
-    see the inline comment), because both df-filter branches live
-    inside them: ``df > cap`` is the stop set the sizes universe
-    anti-joins away, ``2 ≤ df ≤ cap`` is the candidate keep set. The
-    per-doc sizes stay persisted too (they feed the n1 and n2 joins,
-    and runtime exchange reuse does not fire across those branches —
-    verified in the formatted plan). Results are identical: the cap
-    filter only drops rows — it never changes a surviving shingle's
-    df — and df ≤ cap ≡ NOT (df > cap) over a total doc-freq table.
+    The persist sits on the RAW shingle table, below every df filter,
+    so the doc-frequency aggregation reads the cache instead of
+    re-running the parquet→tokenize→explode pipeline. Only the
+    REPEATED shingles' doc-frequencies (df ≥ 2) are kept and
+    persisted, because both df-filter branches live inside them:
+    ``df > cap`` is the stop set the sizes universe anti-joins away,
+    ``2 ≤ df ≤ cap`` is the candidate keep set. The per-doc sizes stay
+    persisted too (they feed the n1 and n2 joins, and runtime exchange
+    reuse does not fire across those branches). Results are
+    identical: the cap filter only drops rows — it never changes a
+    surviving shingle's df — and df ≤ cap ≡ NOT (df > cap) over a
+    total doc-freq table.
     """
     sh_raw = shingle_table(df, id_col, text_col, n).persist()
     doc_freq = sh_raw.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    # Keep only the REPEATED shingles' doc-frequencies (r12
-    # optimization pass, guide §2.3/§3.1): the previous form persisted
-    # the per-distinct-shingle `capped` table — vocab-sized, since most
-    # shingles in a real corpus are unique — and probed it three times
-    # (sizes universe + both candidate sides), so the probes built a
-    # vocab-sized broadcast/join side. But every df-filter branch only
-    # ever needs df ≥ 2 rows: the candidate keep set is 2 ≤ df ≤ cap by
+    # Keep only the REPEATED shingles' doc-frequencies: most shingles
+    # in a real corpus are unique, and every df-filter branch only
+    # needs df ≥ 2 rows — the candidate keep set is 2 ≤ df ≤ cap by
     # definition, and the sizes universe (df ≤ cap) is the COMPLEMENT
-    # of the stop set (df > cap ⟹ df ≥ 2 because cap ≥ 1), so it
-    # becomes a broadcast ANTI-join against the tiny stop set — the
-    # exact shape jaccard_pairs_against_index already uses. The cache
-    # and every join build side shrink from all-distinct-shingles to
-    # repeated-shingles-only; results are identical by the complement
-    # identity (df ≤ cap ≡ NOT df > cap over a total doc_freq).
+    # of the stop set (df > cap ⟹ df ≥ 2 because cap ≥ 1), so it is a
+    # broadcast ANTI-join against the tiny stop set. The cache and
+    # every join build side stay repeated-shingles-sized instead of
+    # vocab-sized.
     rep = doc_freq.filter(F.col("__df") >= 2)
     if isinstance(max_df, float):
         cap = df.agg(F.ceil(F.count(F.lit(1)) * max_df).alias("__cap"))
@@ -161,61 +153,59 @@ def jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     )
 
 
+def band_keys(frame: DataFrame, id_col: str, band_cols: list[str],
+              *payload: str) -> DataFrame:
+    """The LIGHT key table of a banded-LSH join: one row per (row,
+    band) with the row id as ``__id``, the ``payload`` columns, the
+    earlier band values ``__b0..__b{B-2}`` that first_band_match
+    reads, and the band index and value as ``__bi``/``__bv``."""
+    return frame.select(
+        F.col(id_col).alias("__id"), *payload,
+        *[F.col(c).alias(f"__b{i}") for i, c in enumerate(band_cols[:-1])],
+        F.posexplode(F.array(*[F.col(c) for c in band_cols]))
+        .alias("__bi", "__bv"))
+
+
+def first_band_match(a: str, b: str, n_bands: int) -> Column:
+    """Join condition between two band_keys frames aliased ``a`` and
+    ``b``: the rows agree on the key row's band, and on NO earlier
+    band — so a pair agreeing on several bands is emitted once, by
+    its first matching band (the OR-construction of Leskovec,
+    Rajaraman & Ullman, *Mining of Massive Datasets* ch. 3, without a
+    distinct over the candidate set). Earlier-band comparisons use
+    NULL→no-match semantics (~coalesce(=, false)): NULL bands neither
+    match nor suppress later matches."""
+    cond = ((F.col(f"{a}.__bi") == F.col(f"{b}.__bi"))
+            & (F.col(f"{a}.__bv") == F.col(f"{b}.__bv")))
+    for p in range(n_bands - 1):
+        cond &= F.when(F.col(f"{a}.__bi") <= p, F.lit(True)).otherwise(
+            ~F.coalesce(F.col(f"{a}.__b{p}") == F.col(f"{b}.__b{p}"),
+                        F.lit(False)))
+    return cond
+
+
 def banded_self_join(frame: DataFrame, band_cols: list[str], id_col: str,
                      pair_select) -> DataFrame:
-    """OR-construction candidate generation shared by every banded-LSH
-    probe (SimHash Hamming, MinHash, embedding near-dup): the pairs
-    agreeing on ANY band, each exactly once, projected through
+    """OR-construction candidate generation over one frame (SimHash
+    Hamming, MinHash, embedding near-dup): the pairs agreeing on ANY
+    band, each exactly once, projected through
     ``pair_select(a_prefix, b_prefix) -> list[Column]`` (the "a."/"b."
     prefixes address the two frame sides). NULL band values never
     match (SQL equality), matching the property tests.
 
-    Shape: the band values explode into a LIGHT (id, band_idx,
-    band_val, earlier bands) key table; ONE self-join on (band_idx,
-    band_val) generates candidates, and a FIRST-MATCHING-BAND
-    predicate inside the join (for every band p before the matched
-    one, the two rows' band-p values must differ) keeps each pair
-    exactly once — the same pair set a distinct would produce,
-    without shuffling the (much larger) candidate set. The frame
-    then joins back once per side to feed pair_select. ``frame``
-    should be persisted by the caller — it feeds the key table and
-    both payload sides.
-
-    The first-match predicate replaced ``.distinct()`` (r11
-    optimization pass, guide §2.4): the distinct was the single
-    biggest stage of every caller — one Exchange + HashAggregate over
-    the full candidate multiset (≈1M rows at sf0.1 for the embedding
-    caller, measured 2.07s of its 2.62s wall) — while the predicate
-    is B-1 extra integer/string comparisons per joined row and the
-    key rows widen by the B-1 earlier band values, which is tiny
-    relative to a candidate-set shuffle at every scale. Earlier-band
-    comparisons use NULL→no-match semantics (~coalesce(=, false)),
-    so NULL bands neither match nor suppress later matches — the
-    property the tests pin.
-
-    This replaced a bands-way union of first-matching-band join
-    branches (r≤10 history): the branch form rescans the persisted
-    frame 2×bands times, which MEASURED 2.7–3.7× slower at 10× docs
-    across all three callers (SimHash 16.3→4.9s, MinHash 7.4→2.8s,
-    embedding-LSH 80.8→22.1s isolated) — the light-key explode +
-    two payload joins win even when the payload is a 64-double
-    vector, because the pair count after banding is tiny relative to
-    the frame."""
-    keys = frame.select(
-        F.col(id_col).alias("__id"),
-        *[F.col(c).alias(f"__b{i}") for i, c in enumerate(band_cols[:-1])],
-        F.posexplode(F.array(*[F.col(c) for c in band_cols]))
-        .alias("__bi", "__bv"))
-    cond = ((F.col("ka.__bi") == F.col("kb.__bi"))
-            & (F.col("ka.__bv") == F.col("kb.__bv"))
-            & (F.col("ka.__id") < F.col("kb.__id")))
-    for p in range(len(band_cols) - 1):
-        # first-match-only: when the matched band index is past band
-        # p, band p must NOT also match (else that earlier join row
-        # already emitted this pair)
-        cond &= F.when(F.col("ka.__bi") <= p, F.lit(True)).otherwise(
-            ~F.coalesce(F.col(f"ka.__b{p}") == F.col(f"kb.__b{p}"),
-                        F.lit(False)))
+    Shape: ONE self-join of the light band_keys table on (band_idx,
+    band_val) under first_band_match; the frame then joins back once
+    per side to feed pair_select. ``frame`` should be persisted by the
+    caller — it feeds the key table and both payload sides. The key
+    rows carry only ids, not the payload: the pair count after banding
+    is tiny relative to the frame, so two payload joins cost less than
+    dragging a 64-double vector through the candidate join, and far
+    less than a union of per-band join branches (2.7–3.7× slower at
+    10× docs on all three callers) or a distinct over the candidate
+    multiset."""
+    keys = band_keys(frame, id_col, band_cols)
+    cond = ((F.col("ka.__id") < F.col("kb.__id"))
+            & first_band_match("ka", "kb", len(band_cols)))
     pairs = (keys.alias("ka").join(keys.alias("kb"), cond)
         .select(F.col("ka.__id").alias("__id1"),
                 F.col("kb.__id").alias("__id2")))
@@ -241,12 +231,10 @@ def contamination_overlap(df: DataFrame, id_col: str, text_col: str,
     benchmark side and the corpus side, so it is persisted to keep
     the tokenize/explode pass single."""
     sh = shingle_table(df, id_col, text_col, n).persist()
-    # no .distinct() on the benchmark probe side (r12 pass, guide
-    # §2.4): the left-semi join's broadcast hash build dedups keys
-    # itself, so the distinct was an extra shuffle+agg of the
-    # benchmark shingle set per query for an identical result (the
-    # broadcast collect grows by the benchmark's internal repeats,
-    # which a fixed-size eval suite keeps bounded)
+    # no .distinct() on the benchmark probe side: the left-semi
+    # join's broadcast hash build dedups keys itself (the broadcast
+    # grows by the benchmark's internal repeats, which a fixed-size
+    # eval suite keeps bounded)
     bench_shingles = (sh.filter(bench_filter(F.col("id")))
                       .select("shingle"))
     return (sh.filter(~bench_filter(F.col("id")))
@@ -310,14 +298,12 @@ def jaccard_pairs_against_index(new_df: DataFrame, index: DataFrame,
     ``spark.catalog.clearCache()`` per batch (what the registry's
     _pinned boundary and the multi-batch test do), or executor
     storage grows by ~3 frames per batch."""
-    # Persist the RAW shingle tables (r11 optimization pass): the
-    # persists used to sit ABOVE the stop-shingle anti-joins, so while
-    # the index cache materialized, the stop set's doc-frequency agg
-    # had already re-executed the index's tokenize/explode pipeline a
-    # second time (and stop itself derives from idx). Caching the raw
-    # frames instead means the (corpus-sized) index pipeline runs
-    # exactly once; the cheap broadcast anti-join against the tiny
-    # stop set is re-evaluated per consumer from the cache.
+    # Persist the RAW shingle tables, below the stop-shingle
+    # anti-joins: the stop set derives from idx, so a cache above the
+    # anti-join would re-run the (corpus-sized) index pipeline once
+    # more for the stop set's doc-frequency agg. The cheap broadcast
+    # anti-join against the tiny stop set is re-evaluated per
+    # consumer from the cache.
     sh_new = shingle_table(new_df, id_col, text_col, n).persist()
     idx = index.select(F.col("id"), F.col("shingle")).persist()
     if max_df is not None:
@@ -343,10 +329,8 @@ def jaccard_pairs_against_index(new_df: DataFrame, index: DataFrame,
     # index join side is semi-joined down to the batch's shingle set —
     # batch-sized, so AQE turns this into a broadcast semi-join and the
     # candidate join's corpus-side input shrinks to the overlap.
-    # No .distinct() on the probe side (r12 pass, guide §2.4): a
-    # semi-join ignores right-side multiplicity — its hash build
-    # dedups keys anyway — so the distinct was a full extra shuffle of
-    # the batch shingle set for an identical result.
+    # No .distinct() on the probe side: a semi-join ignores
+    # right-side multiplicity — its hash build dedups keys anyway.
     idx_c = idx.join(sh_new.select("shingle"), "shingle", "left_semi")
     common = (
         sh_new.alias("a").join(idx_c.alias("b"), "shingle")
@@ -423,27 +407,17 @@ def connected_components(pairs: DataFrame, id1: str = "id1",
     are small, so this converges in 2-4 rounds; each round is one
     shuffle on the edge key, no driver-side graph.
     """
-    # Symmetrize via ONE explode, not a self-union (r11 optimization
-    # pass, guide §2.4): ``pairs`` may carry an arbitrarily deep
-    # upstream plan (the corpus builds feed a full jaccard(+semantic
-    # LSH) pipeline here), and a union referencing it twice embeds
-    # that whole subtree TWICE in the edge job — the un-persisted
-    # tails (candidate joins, scoring aggregations) execute twice and
-    # the doubled plan is re-optimized/compiled per CC call. The
-    # explode keeps a single reference, so the pair pipeline runs
-    # exactly once per edge materialization. Interleaved A/B
-    # (fresh-session min-of-2, both orders): llm_corpus_build_semantic
-    # 20.5/14.9s → 13.4/11.9s, dedup_threshold_sweep 8.2/6.1 →
-    # 4.6/4.7, dedup_clusters 6.0/4.9 → 4.1/3.9 — every CC consumer
-    # faster in both rounds.
-    # NO .distinct() (r11 optimization pass): duplicate edges
-    # cannot change a min-label propagation — the per-round
-    # groupBy(src).min(label) absorbs them — so deduping here was
-    # a full extra shuffle+aggregate of the edge set per CC call.
-    # Every current producer emits distinct (id1 < id2) pairs
-    # already; the one union caller (lexical ∪ semantic corpus
-    # edges) has multiplicity ≤ 2 on the overlap, which costs
-    # less in the round joins than its own distinct did.
+    # Symmetrize via ONE explode, not a self-union: ``pairs`` may
+    # carry an arbitrarily deep upstream plan (the corpus builds feed
+    # a full jaccard(+semantic LSH) pipeline here), and a union
+    # referencing it twice embeds that whole subtree TWICE in the edge
+    # job — the un-persisted tails execute twice and the doubled plan
+    # is re-optimized per CC call.
+    # NO .distinct(): duplicate edges cannot change a min-label
+    # propagation — the per-round groupBy(src).min(label) absorbs
+    # them — so deduping would be an extra shuffle of the edge set.
+    # The one union caller (lexical ∪ semantic corpus edges) has
+    # multiplicity ≤ 2 on the overlap.
     # pre-partition on the per-round join key and CHECKPOINT the
     # SHUFFLED form: every round's edges.dst = labels.id join then
     # reuses this partitioning and only the (small) label frame
@@ -458,13 +432,11 @@ def connected_components(pairs: DataFrame, id1: str = "id1",
         .repartition(F.col("dst"))
         .localCheckpoint(eager=True)
     )
-    # Round 1 folded into the label INITIALIZATION (r11 pass): with
-    # identity starting labels, round 1's result for node s is exactly
+    # Round 1 folded into the label INITIALIZATION: with identity
+    # starting labels, round 1's result for node s is exactly
     # least(s, min over incident edges of dst) — one groupBy over the
-    # checkpointed edges replaces the old id-distinct shuffle PLUS the
-    # first propagate round's join+groupBy+checkpoint. The node set is
-    # identical (symmetrized edges put every node in src), and the
-    # label trajectory from round 1 onward is bit-identical.
+    # checkpointed edges instead of an id-distinct shuffle plus a
+    # propagate round. Symmetrized edges put every node in src.
     labels = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("nmin"))
@@ -499,13 +471,11 @@ def connected_components(pairs: DataFrame, id1: str = "id1",
         # materializes the round (shared by the convergence check and
         # the next round) and resets the plan to a leaf. (On a real
         # cluster use checkpoint() to reliable storage.)
-        # The convergence count RIDES the checkpoint job (r12
-        # optimization pass, guide §2.4 — don't run a second action
-        # for a value the first one computed): observe() attaches a
-        # CollectMetrics accumulator to the plan the eager checkpoint
-        # executes, so each round is ONE job instead of checkpoint +
-        # count. Sum over zero rows is NULL → treated as converged
-        # (no rows = no labels = nothing can change).
+        # The convergence count RIDES the checkpoint job: observe()
+        # attaches a CollectMetrics accumulator to the plan the eager
+        # checkpoint executes, so each round is ONE job instead of
+        # checkpoint + count. Sum over zero rows is NULL → treated as
+        # converged (no rows = no labels = nothing can change).
         obs = Observation()
         updated = (propagate(labels)
                    .observe(obs, F.sum(F.col("changed").cast("long"))
@@ -662,24 +632,26 @@ def word_block_paragraphs(df: DataFrame, id_col: str, text_col: str,
                            F.concat_ws(" ", piece).alias("para"))
 
 
-def dedup_paragraphs(paras: DataFrame) -> DataFrame:
-    """Cross-document paragraph-level EXACT dedup, keep-first: among
-    all occurrences of an identical paragraph (md5 of its text,
-    anywhere in the corpus — including repeats inside one document),
-    only the occurrence with the smallest (doc_id, idx) survives.
-    This removes the repeated boilerplate (headers/footers/nav) that
-    document-level Jaccard misses because each containing document is
-    otherwise unique — the standard corpus-hygiene stage between
-    exact-doc and near-dup passes.
+def keep_first_paragraph() -> Column:
+    """True on the first occurrence — smallest (doc_id, idx) — of each
+    distinct paragraph text (md5 of ``para``) in a (doc_id, idx, para)
+    frame, anywhere in the corpus including repeats inside one
+    document. ONE hash-keyed window: linear at 100 TB, no joins, no
+    candidate pairs."""
+    from pyspark.sql import Window
+    w = Window.partitionBy(F.md5(F.col("para").cast("binary"))) \
+        .orderBy("doc_id", "idx")
+    return F.row_number().over(w) == 1
 
-    Shuffle shape: ONE hash-keyed window (row_number over
-    md5(para)) — linear at 100 TB; no joins, no candidate pairs.
+
+def dedup_paragraphs(paras: DataFrame) -> DataFrame:
+    """Cross-document paragraph-level EXACT dedup, keep-first: only
+    the keep_first_paragraph occurrence of each identical paragraph
+    survives. This removes the repeated boilerplate
+    (headers/footers/nav) that document-level Jaccard misses because
+    each containing document is otherwise unique — the standard
+    corpus-hygiene stage between exact-doc and near-dup passes.
     Input is the (doc_id, idx, para) frame of blank_line_paragraphs /
     word_block_paragraphs; output is the kept subset."""
-    from pyspark.sql import Window
-    hashed = paras.withColumn(
-        "__h", F.md5(F.col("para").cast("binary")))
-    w = Window.partitionBy("__h").orderBy("doc_id", "idx")
-    return (hashed.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("doc_id", "idx", "para"))
+    return (paras.withColumn("__keep", keep_first_paragraph())
+            .filter(F.col("__keep")).select("doc_id", "idx", "para"))

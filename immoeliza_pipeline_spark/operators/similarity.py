@@ -15,6 +15,11 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.operators.dedup import (banded_self_join,
+                                                       band_keys,
+                                                       first_band_match)
+from immoeliza_pipeline_spark.operators.window_ops import topk_per_group
+
 
 def as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -39,7 +44,6 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     """Exact top-k cosine neighbors: broadcast the query set, rank
     per query on (rounded sim desc, id asc). Ranking on the ROUNDED
     score keeps the result stable across engines' fp low bits."""
-    from pyspark.sql import Window
     q = queries.select(F.col(id_col).alias("query_id"),
                        as_double(F.col(vec_col)).alias("qvec"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
@@ -48,9 +52,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     scored = pairs.select(
         "query_id", "neighbor_id",
         (F.floor((cosine(F.col("qvec"), F.col("cvec"))) * 10000 + 0.5) / 10000).alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return topk_per_group(scored, "query_id", "cos_sim", k, "neighbor_id")
 
 
 def near_dup_pairs(corpus: DataFrame, id_col: str, vec_col: str,
@@ -76,9 +78,8 @@ def auto_rows_per_band(n: int, target: int = LSH_TARGET_BUCKET_LOAD,
     with target · 2^r ≥ n, i.e. ⌈log2(n/target)⌉ clamped — expected
     bucket load n/2^r stays ≤ target, so candidate volume per band
     (Σ over buckets of load²) grows ~linearly with n instead of
-    quadratically at fixed width. The r9 scale laps measured exactly
-    this ladder by hand: r=3 at 2k vectors, r=6 at 20k (84s → 10.6s),
-    r=8 at 200k. INTEGER comparisons only — a float log2 could round
+    quadratically at fixed width: r=3 at 2k vectors, r=6 at 20k, r=8
+    at 200k. INTEGER comparisons only — a float log2 could round
     across the boundary differently per engine; the DuckDB oracle
     mirrors the same ladder as a CASE over count(*). Recall retention
     per +1 of r follows 1-(1-p^r)^b (see near_dup_pairs_bucketed);
@@ -103,27 +104,12 @@ def near_dup_pairs_bucketed(corpus: DataFrame, id_col: str, vec_col: str,
     the same pair set exactly — band i uses planes [i*r, (i+1)*r).
 
     ``rows_per_band=None`` (default) derives r from the corpus row
-    count via auto_rows_per_band — the knob the 10×/100× scale laps
-    previously turned by hand. The count() is one metadata-cheap job
-    at plan-build time."""
-    from immoeliza_pipeline_spark.operators.dedup import banded_self_join
+    count via auto_rows_per_band. The count() is one metadata-cheap
+    job at plan-build time."""
     r = (auto_rows_per_band(corpus.count())
          if rows_per_band is None else rows_per_band)
-    # All bands*r plane projections in ONE vector traversal (the
-    # staged __projs column), then the band buckets read elements of
-    # that materialized array — measured ~12% faster end-to-end than
-    # bands*r separate zip_with+aggregate chains. Norm precomputed
-    # ONCE per vector (not once per candidate pair); the frame is
-    # persisted because it feeds both sides of every band join.
-    c0 = corpus.select(F.col(id_col).alias("vid"),
-                       as_double(F.col(vec_col)).alias("v"))
-    c1 = c0.select("vid", "v", hyperplane_projections(
-        F.col("v"), dim, bands * r).alias("__projs"))
-    c = c1.select(
-        "vid", "v",
-        *[bucket_from_projections(F.col("__projs"), i * r, r)
-          .alias(f"band{i}") for i in range(bands)],
-        norm(F.col("v")).alias("nv")).persist()
+    # persisted: feeds the key table and both payload sides of the join
+    c = hyperplane_bands(corpus, id_col, vec_col, dim, bands, r).persist()
 
     def pair_select(a, b):
         sim = (F.floor((dot(F.col(f"{a}.v"), F.col(f"{b}.v"))
@@ -137,94 +123,85 @@ def near_dup_pairs_bucketed(corpus: DataFrame, id_col: str, vec_col: str,
     return candidates.filter(F.col("cos_sim") >= threshold)
 
 
-def _struct_rows(frame: DataFrame, *cols: str) -> DataFrame:
-    """Collapse a small (centroid/seed) frame to ONE row holding the
-    array of its (cols...) structs — the broadcast payload for the
-    shuffle-free per-row argmin in the assignment operators below.
-    collect_list order is nondeterministic, but every consumer reduces
-    the array with an order-independent total order (array_min /
-    array_sort over (distance, id) structs), so results are exact."""
-    return frame.agg(F.collect_list(F.struct(*cols)).alias("__cs"))
+def _centers(frame: DataFrame) -> DataFrame:
+    """A (cid, c) centre frame as ONE broadcast row holding the array
+    of its (cid, c) structs. collect_list order is nondeterministic,
+    but every consumer reduces the array with an order-independent
+    total order (array_min / array_sort over (distance, cid)
+    structs), so results are exact."""
+    return F.broadcast(frame.agg(F.collect_list(F.struct("cid", "c")).alias("__cs")))
 
 
-def ivf_assign(corpus: DataFrame, seeds: DataFrame, id_col: str,
-               vec_col: str) -> DataFrame:
-    """IVF coarse quantization: assign every vector to its nearest
-    seed centroid (deterministic seed set stands in for k-means —
-    same plan shape; swap in trained centroids without changing the
-    query). The seed set is collapsed to ONE array-of-structs row and
-    broadcast; the argmin runs per corpus row via array_min (r12
-    optimization pass, guide §2.4) — the previous crossJoin +
-    groupBy(vid, v) struct-min shuffled the ENTIRE vector table (and
-    hashed a 64-double group key per candidate row) for a decision
-    that is purely per-row. Bit-identical: same quantized negsim per
-    (v, seed) — same left-to-right fold — and array_min uses the same
-    struct total order (negsim, then seed_id) the min aggregate did.
-    The corpus is now never shuffled by assignment at any scale."""
-    c = corpus.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v"))
-    s = seeds.select(F.col(id_col).alias("seed_id"),
-                     as_double(F.col(vec_col)).alias("sv"))
-    best = F.array_min(F.transform(
-        F.col("__cs"),
-        lambda t: F.struct(
-            (F.floor((-cosine(F.col("v"), t["sv"])) * 1000000 + 0.5)
-             / 1000000).alias("negsim"),
-            t["seed_id"].alias("seed_id"))))
-    # empty seed set → array_min(NULL-less empty) = NULL → drop, the
-    # rows the old inner crossJoin never produced
-    return (c.crossJoin(F.broadcast(_struct_rows(s, "seed_id", "sv")))
-            .select("vid", "v", best["seed_id"].alias("cell"))
-            .filter(F.col("cell").isNotNull()))
+def _distances(vec: str, dist) -> Column:
+    """Per row, the (d, cid) struct of every centre in ``__cs``."""
+    return F.transform(F.col("__cs"), lambda t: F.struct(
+        dist(F.col(vec), t["c"]).alias("d"), t["cid"].alias("cid")))
 
 
-def ivf_assign_topn(df: DataFrame, seeds: DataFrame, id_col: str,
-                    vec_col: str, nprobe: int) -> DataFrame:
-    """The query-side multi-probe assignment: each vector's ``nprobe``
-    NEAREST seed cells (ordered by rounded negated cosine, seed-id
-    tie-break — slot 1 equals ivf_assign's argmin cell exactly).
-    One (vid, cell) row per probed cell. Same shuffle-free shape as
-    ivf_assign (r12 pass): the per-row candidate array is sorted by
-    the same (negsim, seed_id) total order the old row_number window
-    used — array_sort and the window sort share Spark's struct
-    ordering — and the first ``nprobe`` slots explode; the window's
-    per-vid shuffle is gone."""
-    c = df.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v"))
-    s = seeds.select(F.col(id_col).alias("seed_id"),
-                     as_double(F.col(vec_col)).alias("sv"))
-    ranked = F.slice(F.array_sort(F.transform(
-        F.col("__cs"),
-        lambda t: F.struct(
-            (F.floor((-cosine(F.col("v"), t["sv"])) * 1000000 + 0.5)
-             / 1000000).alias("negsim"),
-            t["seed_id"].alias("seed_id")))), 1, nprobe)
-    return (c.crossJoin(F.broadcast(_struct_rows(s, "seed_id", "sv")))
-            .select("vid", "v", F.explode(ranked).alias("__cand"))
-            .select("vid", "v", F.col("__cand.seed_id").alias("cell")))
+def nearest(frame: DataFrame, vec: str, centers: DataFrame,
+            dist) -> DataFrame:
+    """``frame`` plus ``cid``/``d``: each row's nearest centre of the
+    (cid, c) frame ``centers`` under ``dist(vec, c)``. ``dist`` must
+    be quantized (ties then break on cid), so any engine picks the
+    same centre.
+
+    The centre frame is broadcast as one array row and the argmin runs
+    per row via array_min, so assignment never shuffles ``frame``.
+    An empty centre set gives array_min(empty) = NULL, and the row is
+    dropped, as an inner cross join with no centres would drop it."""
+    best = F.array_min(_distances(vec, dist))
+    return (frame.crossJoin(_centers(centers))
+            .select(*frame.columns, best["cid"].alias("cid"),
+                    best["d"].alias("d"))
+            .filter(F.col("cid").isNotNull()))
+
+
+def nearest_n(frame: DataFrame, vec: str, centers: DataFrame, dist,
+              n: int) -> DataFrame:
+    """One (frame columns, cid) row for each of a row's ``n`` nearest
+    centres, in the (d, cid) order of ``nearest`` — slot 1 is its
+    argmin. Same broadcast, shuffle-free shape: the per-row distance
+    array is sorted and its first ``n`` slots explode."""
+    ranked = F.slice(F.array_sort(_distances(vec, dist)), 1, n)
+    return (frame.crossJoin(_centers(centers))
+            .select(*frame.columns, F.explode(ranked).alias("__cand"))
+            .select(*frame.columns, F.col("__cand.cid").alias("cid")))
+
+
+def _negcos_q(v: Column, c: Column) -> Column:
+    """Negated cosine quantized to integer millionths."""
+    return F.floor((-cosine(v, c)) * 1000000 + 0.5) / 1000000
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, seeds: DataFrame,
              id_col: str, vec_col: str, k: int = 5,
              nprobe: int = 1) -> DataFrame:
-    """IVF search: rank candidates only within the query's ``nprobe``
-    nearest cells. At 100 TB the corpus is written partitioned by
-    cell, so a query scans nprobe/cells of the data — nprobe is the
-    recall knob (measured at sf0.01 vs brute force: recall@5 = 0.40 /
-    0.68 / 0.88 at nprobe 1/2/3 on near-uniform synthetic vectors).
-    Each corpus vector lives in exactly ONE cell, so a (query,
-    neighbor) pair appears at most once — no dedup shuffle needed."""
-    from pyspark.sql import Window
-    cells = ivf_assign(corpus, seeds, id_col, vec_col)
-    qcells = (ivf_assign_topn(queries, seeds, id_col, vec_col, nprobe)
-              .select(F.col("vid").alias("query_id"), F.col("v").alias("qv"),
-                      "cell"))
-    pairs = cells.join(F.broadcast(qcells), "cell").filter(
+    """IVF search: every corpus vector goes to its nearest seed cell
+    (a deterministic seed set stands in for k-means — same plan
+    shape; swap in trained centroids without changing the query), and
+    candidates are ranked only within the query's ``nprobe`` nearest
+    cells. At 100 TB the corpus is written partitioned by cell, so a
+    query scans nprobe/cells of the data — nprobe is the recall knob
+    (measured at sf0.01 vs brute force: recall@5 = 0.40 / 0.68 / 0.88
+    at nprobe 1/2/3 on near-uniform synthetic vectors). Each corpus
+    vector lives in exactly ONE cell, so a (query, neighbor) pair
+    appears at most once — no dedup shuffle needed."""
+    s = seeds.select(F.col(id_col).alias("cid"),
+                     as_double(F.col(vec_col)).alias("c"))
+    cells = nearest(
+        corpus.select(F.col(id_col).alias("vid"),
+                      as_double(F.col(vec_col)).alias("v")),
+        "v", s, _negcos_q)
+    qcells = nearest_n(
+        queries.select(F.col(id_col).alias("query_id"),
+                       as_double(F.col(vec_col)).alias("qv")),
+        "qv", s, _negcos_q, nprobe)
+    pairs = cells.join(F.broadcast(qcells), "cid").filter(
         F.col("vid") != F.col("query_id"))
     scored = pairs.select(
-        "query_id", F.col("vid").alias("neighbor_id"), "cell",
+        "query_id", F.col("vid").alias("neighbor_id"), F.col("cid").alias("cell"),
         (F.floor((cosine(F.col("qv"), F.col("v"))) * 10000 + 0.5) / 10000).alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return topk_per_group(scored, "query_id", "cos_sim", k, "neighbor_id")
 
 
 def sq_dist(a: Column, b: Column) -> Column:
@@ -232,34 +209,20 @@ def sq_dist(a: Column, b: Column) -> Column:
                        F.lit(0.0), lambda acc, x: acc + x)
 
 
+def _sq_dist_q(v: Column, c: Column) -> Column:
+    """Squared euclidean distance quantized to integer millionths."""
+    return F.floor(sq_dist(v, c) * 1000000 + 0.5) / 1000000
+
+
 def kmeans_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """One Lloyd assignment step: each (vid, v) row gets its nearest
-    centroid from the (cid, c) frame by squared euclidean distance.
-    Distances are quantized to integer millionths BEFORE the argmin
-    (ties then break on cid), so any engine picks the same cell.
-
-    Shuffle-free shape (r12 optimization pass, guide §2.4): the K-row
-    centroid frame collapses to ONE array-of-structs row, broadcasts,
-    and the argmin runs per corpus row via array_min. The previous
-    crossJoin + groupBy(vid, v) struct-min shuffled the ENTIRE vector
-    table once per assignment — and hashed a 64-double group key per
-    (row × centroid) candidate — for a purely per-row decision. At
-    100 TB the corpus is now assigned in a single map-only pass.
-    Bit-identical: the quantized distance expression folds the dims
-    in the same left-to-right order, and array_min reduces with the
-    same (d, cid) struct total order the min aggregate used."""
-    best = F.array_min(F.transform(
-        F.col("__cs"),
-        lambda t: F.struct(
-            (F.floor(sq_dist(F.col("v"), t["c"]) * 1000000 + 0.5)
-             / 1000000).alias("d"),
-            t["cid"].alias("cid"))))
-    # empty centroid set → array_min(empty) = NULL → drop, the rows
-    # the old inner crossJoin never produced
-    return (vectors.crossJoin(F.broadcast(_struct_rows(centroids, "cid", "c")))
-            .select("vid", "v", best["cid"].alias("cid"),
-                    best["d"].alias("sq_dist"))
-            .filter(F.col("cid").isNotNull()))
+    centroid from the (cid, c) frame by squared euclidean distance,
+    as (vid, v, cid, sq_dist). Distances are quantized to integer
+    millionths BEFORE the argmin (ties then break on cid), so any
+    engine picks the same cell; the argmin is ``nearest``'s
+    broadcast, so the corpus is assigned in a single map-only pass."""
+    return (nearest(vectors, "v", centroids, _sq_dist_q)
+            .withColumnRenamed("d", "sq_dist"))
 
 
 def kmeans_update(assigned: DataFrame) -> DataFrame:
@@ -311,9 +274,9 @@ def kmeans_iterations(corpus: DataFrame, id_col: str, vec_col: str,
     plans-layer target of 256·k sample rows and k ∝ √n, per-round
     training cost is 256·k² ≈ 16·n — LINEAR — and the one full n·k
     assignment pass is the only super-linear term left (the
-    structural IVF cost). None = train on everything (the pre-r11
-    behavior; at oracle scale the threshold computes to 65536 anyway,
-    so both paths coincide exactly).
+    structural IVF cost). None = train on everything (at oracle scale
+    the threshold computes to 65536 anyway, so both paths coincide
+    exactly).
 
     Per round: one broadcast of K centroids + one (cid, dim) shuffle —
     at 100 TB the update runs on the assignment output without
@@ -330,13 +293,11 @@ def kmeans_iterations(corpus: DataFrame, id_col: str, vec_col: str,
     for _ in range(n_iter):
         assigned = kmeans_assign(training, centroids)
         centroids = kmeans_update(assigned)
-    # NOTE (r11 optimization pass, measured): the trained centroids
-    # here have exactly ONE downstream consumer (the final broadcast
-    # assignment), so the nested Lloyd chain executes once either way
-    # and a per-round localCheckpoint only ADDS job/materialization
-    # overhead — measured 2.5s → 3.4s at sf0.1. ivf_kmeans_topk, whose
-    # trained centroids feed TWO broadcasts (corpus assignment + query
-    # probing), DOES checkpoint each round — see below.
+    # No per-round checkpoint: the trained centroids have ONE consumer
+    # (the final assignment), so the Lloyd chain runs once either way
+    # and a checkpoint only adds a job per round (measured 2.5s → 3.4s
+    # at sf0.1). ivf_kmeans_topk, whose centroids feed two broadcasts,
+    # does checkpoint.
     return kmeans_assign(vectors, centroids)
 
 
@@ -371,7 +332,6 @@ def ivf_kmeans_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     256·k target), the corpus is assigned ONCE and written
     partitioned by cell, and each query scans ~nprobe/k of the
     data."""
-    from pyspark.sql import Window
     # the unit-normalized corpus feeds the seed init, the training
     # sample, AND the final cell assignment — persist so the scan +
     # normalize pipeline runs once (released at the harness
@@ -389,32 +349,17 @@ def ivf_kmeans_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
         # kmeans_iterations. Quantized values, bit-identical.
         centroids = kmeans_update(
             kmeans_assign(training, centroids)).localCheckpoint(eager=True)
-    cells = kmeans_assign(c, centroids).select("vid", "v", "cid")
+    cells = nearest(c, "v", centroids, _sq_dist_q).select("vid", "v", "cid")
     q = unit_vectors(queries, id_col, vec_col).select(
         F.col("vid").alias("query_id"), F.col("v").alias("qv"))
-    # nprobe nearest trained centroids per query via the same
-    # shuffle-free sorted-slice shape as ivf_assign_topn (r12 pass):
-    # identical (d, cid) total order as the old row_number window,
-    # without the per-query_id window shuffle
-    ranked = F.slice(F.array_sort(F.transform(
-        F.col("__cs"),
-        lambda t: F.struct(
-            (F.floor(sq_dist(F.col("qv"), t["c"]) * 1000000 + 0.5)
-             / 1000000).alias("d"),
-            t["cid"].alias("cid")))), 1, nprobe)
-    qcells = (q.crossJoin(F.broadcast(_struct_rows(centroids, "cid", "c")))
-              .select("query_id", "qv", F.explode(ranked).alias("__cand"))
-              .select("query_id", "qv", F.col("__cand.cid").alias("cid")))
+    qcells = nearest_n(q, "qv", centroids, _sq_dist_q, nprobe)
     pairs = cells.join(F.broadcast(qcells), "cid").filter(
         F.col("vid") != F.col("query_id"))
     scored = pairs.select(
         "query_id", F.col("vid").alias("neighbor_id"), F.col("cid").alias("cell"),
         (F.floor(dot(F.col("qv"), F.col("v")) * 10000 + 0.5) / 10000)
         .alias("cos_sim"))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"),
-                                                F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k))
+    return topk_per_group(scored, "query_id", "cos_sim", k, "neighbor_id")
 
 
 def _rademacher(j: int, d: int) -> int:
@@ -423,8 +368,7 @@ def _rademacher(j: int, d: int) -> int:
     return 1 if int(h[0], 16) >= 8 else -1
 
 
-def hyperplane_projections(vec_col: Column, dim: int, n_planes: int,
-                           plane_offset: int = 0) -> Column:
+def hyperplane_projections(vec_col: Column, dim: int, n_planes: int) -> Column:
     """All n_planes Rademacher projections in ONE vector traversal:
     the vector is zipped with a dim×n_planes sign-matrix literal
     (element d holds the n_planes signs for dimension d, every sign a
@@ -441,8 +385,7 @@ def hyperplane_projections(vec_col: Column, dim: int, n_planes: int,
     # ONE nested-list literal (a single pre-folded Literal node), not
     # dim×n_planes CreateArray/lit children — the unrolled form costs
     # a py4j roundtrip per element at plan build and bloats analysis
-    signs_t = F.lit([[float(_rademacher(plane_offset + j, d))
-                      for j in range(n_planes)]
+    signs_t = F.lit([[float(_rademacher(j, d)) for j in range(n_planes)]
                      for d in range(dim)])
     init = F.lit([0.0] * n_planes)
     return F.aggregate(
@@ -465,22 +408,24 @@ def bucket_from_projections(projs_col: Column, start: int = 0,
     return bucket
 
 
-def hyperplane_bucket(vec_col: Column, dim: int, n_planes: int = 8,
-                      plane_offset: int = 0) -> Column:
-    """Single-expression LSH bucket (one plane set): n_planes separate
-    zip_with+aggregate projections. Kept for single-band callers that
-    cannot stage a projections column; multi-band probes should use
-    hyperplane_projections + bucket_from_projections staged as two
-    projections (one traversal instead of bands×rows)."""
-    v = F.transform(vec_col, lambda x: x.cast("double"))
-    bucket = F.lit(0)
-    for j in range(n_planes):
-        signs = F.array(*[
-            F.lit(float(_rademacher(plane_offset + j, d))) for d in range(dim)])
-        proj = F.aggregate(F.zip_with(v, signs, lambda x, s: x * s),
-                           F.lit(0.0), lambda acc, x: acc + x)
-        bucket = bucket + F.when(proj > 0, F.lit(2 ** j)).otherwise(0)
-    return bucket
+def hyperplane_bands(df: DataFrame, id_col: str, vec_col: str, dim: int,
+                     bands: int, r: int) -> DataFrame:
+    """(vid, v, nv, band0..band{bands-1}): the double vector, its norm
+    and ``bands`` hyperplane-LSH buckets of ``r`` planes each (band i
+    uses planes [i*r, (i+1)*r)). All bands*r projections run in ONE
+    vector traversal staged as its own column, which the bands then
+    read (measured ~12% faster end-to-end than bands*r separate
+    zip_with+aggregate chains); the norm is computed once per vector,
+    not once per candidate pair. Callers persist the result when it
+    feeds several join sides."""
+    c0 = df.select(F.col(id_col).alias("vid"),
+                   as_double(F.col(vec_col)).alias("v"))
+    c1 = c0.select("vid", "v", hyperplane_projections(
+        F.col("v"), dim, bands * r).alias("__projs"))
+    return c1.select(
+        "vid", "v", norm(F.col("v")).alias("nv"),
+        *[bucket_from_projections(F.col("__projs"), i * r, r)
+          .alias(f"band{i}") for i in range(bands)])
 
 
 def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -498,79 +443,33 @@ def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     embeddings — real embedding corpora cluster far more and prune
     far harder). Tune rows_per_band up for fewer candidates, bands up
     for recall. At 100 TB the corpus is written bucketed by the band
-    keys once; each query probes ``bands`` buckets. First-matching-
-    band branches keep candidate pairs disjoint — no distinct shuffle.
+    keys once; each query probes ``bands`` buckets.
 
-    Join shape MEASURED against the symmetric exploded light-key form
-    that banded_self_join uses (r10 A/B, min-of-2): that form won at
-    sf0.1 (4.4s vs 5.25) but LOST at 10× (8.83s vs 6.44) — it pays a
-    distinct plus a corpus-side keyed join, while broadcast probes
-    never shuffle the corpus at all. The r11 pass replaced the
-    bands-way UNION of broadcast branches (which rescanned the
-    persisted corpus cache once per band — 2×bands cache scans and
-    joins per query run) with ONE broadcast join: the corpus side
-    posexplodes its band values (narrow, straight from the cache, no
-    shuffle), the tiny query side's exploded keys broadcast, and the
-    same first-matching-band predicate banded_self_join uses keeps
-    each agreeing pair exactly once — the identical candidate set the
-    branch union produced, in a single stage that still never
-    shuffles the corpus."""
-    from pyspark.sql import Window
-    r = rows_per_band
-    npl = bands * r
-
-    def banded(df, out_id):
-        projected = df.select(
-            F.col(id_col).alias(out_id),
-            as_double(F.col(vec_col)).alias(f"{out_id}_v"),
-            hyperplane_projections(F.col(vec_col), dim, npl).alias("__p"))
-        # norm computed ONCE per vector here (persisted below), not
-        # once per candidate pair in the scoring stage — same double
-        # (identical expression on identical input), fewer array folds
-        return projected.select(
-            out_id, f"{out_id}_v", norm(F.col(f"{out_id}_v")).alias(f"{out_id}_nv"),
-            *[bucket_from_projections(F.col("__p"), i * r, r).alias(f"band{i}")
-              for i in range(bands)])
-
-    # BOTH banded frames feed the exploded-key probe — persist so the
-    # 18-plane projection runs once per vector (released at the
+    Join shape: a broadcast probe, not banded_self_join's symmetric
+    self-join — a small query set against a corpus. The corpus band
+    keys (carrying the vector payload) explode narrowly from the
+    cache, the query keys broadcast, and first_band_match keeps each
+    agreeing pair exactly once, so the corpus is never shuffled. The
+    self-join shape won on a corpus against itself at sf0.1 but lost
+    at 10× (8.83s vs 6.44s) on this query-vs-corpus input."""
+    # both banded frames feed the key explode and the scoring payload —
+    # persist so the projection runs once per vector (released at the
     # harness clearCache boundary)
-    c = banded(corpus, "neighbor_id").persist()
-    q = banded(queries, "query_id").persist()
-
-    def keyed(frame, out_id):
-        return frame.select(
-            out_id, f"{out_id}_v", f"{out_id}_nv",
-            *[F.col(f"band{i}") for i in range(bands - 1)],
-            F.posexplode(F.array(*[F.col(f"band{i}")
-                                   for i in range(bands)]))
-            .alias("__bi", "__bv"))
-
-    ck = keyed(c, "neighbor_id").alias("a")
-    qk = keyed(q, "query_id").alias("b")
-    cond = ((F.col("a.__bi") == F.col("b.__bi"))
-            & (F.col("a.__bv") == F.col("b.__bv"))
-            & (F.col("a.neighbor_id") != F.col("b.query_id")))
-    for p in range(bands - 1):
-        # first-match-only (see banded_self_join): a pair agreeing on
-        # an earlier band was already emitted by that band's key row
-        cond &= F.when(F.col("a.__bi") <= p, F.lit(True)).otherwise(
-            ~F.coalesce(F.col(f"a.band{p}") == F.col(f"b.band{p}"),
-                        F.lit(False)))
-    pairs = ck.join(F.broadcast(qk), cond).select(
-        F.col("b.query_id").alias("query_id"),
-        F.col("a.neighbor_id").alias("neighbor_id"),
-        F.col("b.query_id_v").alias("qvec"),
-        F.col("a.neighbor_id_v").alias("cvec"),
-        F.col("b.query_id_nv").alias("qnv"),
-        F.col("a.neighbor_id_nv").alias("cnv"))
+    c = hyperplane_bands(corpus, id_col, vec_col, dim, bands,
+                         rows_per_band).persist()
+    q = hyperplane_bands(queries, id_col, vec_col, dim, bands,
+                         rows_per_band).persist()
+    band_cols = [f"band{i}" for i in range(bands)]
+    ck = band_keys(c, "vid", band_cols, "v", "nv").alias("a")
+    qk = band_keys(q, "vid", band_cols, "v", "nv").alias("b")
+    pairs = ck.join(F.broadcast(qk),
+                    (F.col("a.__id") != F.col("b.__id"))
+                    & first_band_match("a", "b", bands))
     # dot/(nq·nc) with the PRE-COMPUTED norms — identical doubles to
     # cosine()'s dot/(norm·norm), minus two array folds per candidate
     scored = pairs.select(
-        "query_id", "neighbor_id",
-        (F.floor((dot(F.col("qvec"), F.col("cvec"))
-                  / (F.col("qnv") * F.col("cnv"))) * 10000 + 0.5) / 10000)
+        F.col("b.__id").alias("query_id"), F.col("a.__id").alias("neighbor_id"),
+        (F.floor((dot(F.col("b.v"), F.col("a.v"))
+                  / (F.col("b.nv") * F.col("a.nv"))) * 10000 + 0.5) / 10000)
         .alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return topk_per_group(scored, "query_id", "cos_sim", k, "neighbor_id")

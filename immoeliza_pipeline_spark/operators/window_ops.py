@@ -72,9 +72,11 @@ def sessionize(df: DataFrame, key: str, ts_col: str, gap_seconds: int,
 
 
 def topk_per_group(df: DataFrame, group: str, order_col: str, k: int,
-                   tiebreak: str, ascending: bool = False) -> DataFrame:
-    order = [F.asc(order_col) if ascending else F.desc(order_col), F.asc(tiebreak)]
-    w = Window.partitionBy(group).orderBy(*order)
+                   tiebreak: str) -> DataFrame:
+    """The top ``k`` rows of each ``group`` by ``order_col`` descending,
+    ties broken by ``tiebreak`` ascending, numbered in a ``rank``
+    column: one window shuffle on the group key."""
+    w = Window.partitionBy(group).orderBy(F.desc(order_col), F.asc(tiebreak))
     return (df.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
 

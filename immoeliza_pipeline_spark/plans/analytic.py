@@ -181,14 +181,32 @@ GROUP BY 1
 """
 
 
+def _with_empty_grand_total(grouped: DataFrame, source: DataFrame,
+                            keys: list[str], aggs: list,
+                            **consts) -> DataFrame:
+    """``grouped`` (a ROLLUP/CUBE over ``source`` by ``keys``) plus the
+    SQL-standard grand-total row when ``source`` is empty: Spark's
+    grouping-set expansion emits no rows then, where SQL returns one
+    row of NULL keys and the empty-input aggregates. ``aggs`` must
+    include ``n_orders``; ``consts`` gives that row's values for
+    columns that are not aggregates (e.g. a grouping id)."""
+    types = dict(grouped.dtypes)
+    total = (source.agg(*aggs).filter(F.col("n_orders") == 0)
+             .select(*[F.lit(None).cast(types[k]).alias(k) for k in keys],
+                     "*",
+                     *[F.lit(v).cast(types[c]).alias(c)
+                       for c, v in consts.items()]))
+    return grouped.unionByName(total)
+
+
 def rollup_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over (priority, status) with grouping-set totals."""
     orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.rollup("o_orderpriority", "o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n_orders"),
-             N.sum_money(F.col("o_totalprice"), 2).alias("total_price"))
-    )
+    keys = ["o_orderpriority", "o_orderstatus"]
+    aggs = [F.count(F.lit(1)).alias("n_orders"),
+            N.sum_money(F.col("o_totalprice"), 2).alias("total_price")]
+    return _with_empty_grand_total(orders.rollup(*keys).agg(*aggs),
+                                   orders, keys, aggs)
 
 
 ROLLUP_SQL = """
@@ -203,12 +221,12 @@ def cube_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (priority, status) with grouping_id to label the
     aggregation level (all four grouping-set combinations)."""
     orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.cube("o_orderpriority", "o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n_orders"),
-             N.avg_money(F.col("o_totalprice"), 4).alias("avg_price"),
-             F.grouping_id().alias("gid"))
-    )
+    keys = ["o_orderpriority", "o_orderstatus"]
+    aggs = [F.count(F.lit(1)).alias("n_orders"),
+            N.avg_money(F.col("o_totalprice"), 4).alias("avg_price")]
+    return _with_empty_grand_total(
+        orders.cube(*keys).agg(*aggs, F.grouping_id().alias("gid")),
+        orders, keys, aggs, gid=3)
 
 
 CUBE_SQL = """

@@ -520,9 +520,9 @@ def llm_corpus_build(spark: SparkSession, sf_dir: str,
             sem_src, "vec_id", "embedding", dim=64,
             threshold=_SEMANTIC_COS, bands=5,
             rows_per_band=r).select("id1", "id2")
-        # no .distinct() here: connected_components symmetrizes and
-        # distincts its edge input anyway — the extra shuffle bought
-        # nothing (result-identical)
+        # no .distinct() here: duplicate edges cannot change
+        # connected_components' min-label propagation, which
+        # deliberately does not distinct its input either
         edges = edges.unionByName(sem_pairs)
     clusters = D.connected_components(edges, "id1", "id2")
     non_canonical = clusters.filter(

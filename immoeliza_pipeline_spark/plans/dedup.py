@@ -286,29 +286,17 @@ def paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Paragraphize → md5 → one hash-keyed keep-first window → reassemble
     kept paragraphs in original order. Linear at 100 TB: one window
     shuffle on the paragraph hash + one doc-keyed reassembly groupBy,
-    no candidate pairs, no join — totals and kept stats fold into the
-    single reassembly aggregation via a keep flag (r12 pass)."""
-    from pyspark.sql import Window
+    no candidate pairs, no join. Each paragraph carries the
+    keep_first_paragraph flag, and totals and kept stats fold into ONE
+    groupBy(doc_id): n_kept sums the flag, and collect_list skips the
+    NULLs F.when leaves on dropped paragraphs, so dedup_text sees
+    exactly the kept (idx, para) set. Docs whose every paragraph
+    loses get n_kept 0 and dedup_text ''."""
     docs = load_table(spark, sf_dir, "documents")
     paras = D.word_block_paragraphs(docs, "doc_id", "text",
                                     block=_PARA_BLOCK)
-    # ONE pass over the paragraph frame (r12 optimization pass, guide
-    # §2.4): instead of filtering the kept subset and joining a
-    # second, separate per-doc totals aggregation back (three shuffles
-    # plus a join, with the paragraph frame persisted for its two
-    # consumers), mark each paragraph with a keep flag from the same
-    # keep-first window dedup_paragraphs uses and fold totals + kept
-    # stats into ONE groupBy(doc_id): n_kept sums the flag, and
-    # collect_list skips the NULLs F.when leaves on dropped
-    # paragraphs, so dedup_text sees exactly the kept (idx, para)
-    # set. Two shuffles total (window on the hash, groupBy on the
-    # doc), no join, no persist — results identical, including docs
-    # whose every paragraph loses (sum of 0 flags = 0, concat of an
-    # empty list = '', matching the old left-join coalesces).
-    w = Window.partitionBy(F.md5(F.col("para").cast("binary"))) \
-        .orderBy("doc_id", "idx")
-    flagged = paras.withColumn(
-        "__keep", (F.row_number().over(w) == 1).cast("int"))
+    flagged = paras.withColumn("__keep",
+                               D.keep_first_paragraph().cast("int"))
     return (flagged.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_paragraphs"),
                  F.sum("__keep").cast("long").alias("n_kept"),

@@ -49,23 +49,3 @@ def write_lakehouse(df: DataFrame, path: str, fmt: str = "delta",
         writer = writer.partitionBy(*partition_by)
     writer.save(path)
 
-
-def read_jdbc(spark: SparkSession, url: str, table: str,
-              partition_column: str | None = None,
-              num_partitions: int = 8, **options) -> DataFrame:
-    """JDBC source (the scraper's SQLite registry at scale becomes a
-    real database). ``partition_column`` enables parallel reads —
-    without it the whole table streams through one task."""
-    reader = (spark.read.format("jdbc")
-              .option("url", url).option("dbtable", table))
-    if partition_column is not None:
-        bounds = options.pop("bounds", None)
-        if bounds is None:
-            raise ValueError("partitioned JDBC reads need bounds=(lower, upper)")
-        reader = (reader.option("partitionColumn", partition_column)
-                  .option("lowerBound", str(bounds[0]))
-                  .option("upperBound", str(bounds[1]))
-                  .option("numPartitions", str(num_partitions)))
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()

@@ -1,6 +1,8 @@
 """Analytic-core queries vs DuckDB at sf0.001 (fast full-suite check;
 the driver repeats this at sf0.01)."""
 
+import os
+
 import duckdb
 import pytest
 
@@ -48,3 +50,19 @@ def test_analytic_query(spark, sf_dir, name):
         assert sdf.count() >= 0
     else:
         assert_matches_oracle(sdf, sql, sf_dir)
+
+
+@pytest.mark.parametrize("name", ["rollup_order_status",
+                                  "cube_priority_status"])
+def test_grouping_sets_on_empty_orders(tmp_path, spark, sf_dir, name):
+    """An empty orders table gives the oracle's SQL-standard
+    grand-total row (NULL keys, n_orders 0), not zero rows."""
+    for f in os.listdir(sf_dir):
+        if f != "orders.parquet":
+            os.symlink(os.path.join(sf_dir, f), tmp_path / f)
+    duckdb.execute(f"COPY (SELECT * FROM '{sf_dir}/orders.parquet' LIMIT 0)"
+                   f" TO '{tmp_path}/orders.parquet' (FORMAT parquet)")
+    fn, sql = analytic.QUERIES[name]
+    sdf = fn(spark, str(tmp_path))
+    assert sdf.count() == 1
+    assert_matches_oracle(sdf, sql, str(tmp_path))

@@ -3,6 +3,7 @@ operators: each property generates adversarial inputs, runs the JVM
 expression once over the whole batch, and compares to a pure-Python
 reference."""
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -84,26 +85,56 @@ def test_minhash_estimate_tracks_exact_jaccard(spark):
     assert cand.get((0, 1), 0) > cand.get((0, 2), 0)
 
 
+def _banded_pairs(spark, data, shape):
+    """(got pairs, expected pairs) of one banded-LSH join shape over
+    (id, band0, band1, band2) rows, the expectation a naive Python
+    scan: pairs sharing a NON-NULL equal band (SQL equality never
+    matches NULL). ``self``: banded_self_join, unordered pairs
+    id1 < id2. ``probe``: the two-frame broadcast probe built from
+    band_keys/first_band_match (the ann_lsh_topk shape), every
+    (corpus id, query id) pair with distinct ids, where the query
+    frame is the even-id rows."""
+    from immoeliza_pipeline_spark.operators.dedup import (
+        band_keys, banded_self_join, first_band_match)
+    cols = ["band0", "band1", "band2"]
+    df = spark.createDataFrame(data, "id long, band0 int, band1 int, band2 int")
+
+    def agree(a, b):
+        return any(a[k] is not None and a[k] == b[k] for k in (1, 2, 3))
+
+    if shape == "self":
+        out = banded_self_join(
+            df, cols, "id",
+            lambda a, b: [F.col(f"{a}.id").alias("id1"),
+                          F.col(f"{b}.id").alias("id2")])
+        expected = {(a[0], b[0]) for a in data for b in data
+                    if a[0] < b[0] and agree(a, b)}
+    else:
+        ck = band_keys(df, "id", cols).alias("a")
+        qk = band_keys(df.filter(F.col("id") % 2 == 0), "id", cols).alias("b")
+        out = ck.join(F.broadcast(qk),
+                      (F.col("a.__id") != F.col("b.__id"))
+                      & first_band_match("a", "b", len(cols))).select(
+            F.col("a.__id").alias("id1"), F.col("b.__id").alias("id2"))
+        expected = {(a[0], b[0]) for a in data for b in data
+                    if b[0] % 2 == 0 and a[0] != b[0] and agree(a, b)}
+    return [(r.id1, r.id2) for r in out.collect()], expected
+
+
+@pytest.mark.parametrize("shape", ["self", "probe"])
 @settings(max_examples=5, deadline=None)
 @given(st.lists(st.tuples(st.integers(0, 3), st.integers(0, 3),
                           st.integers(0, 3)),
                 min_size=2, max_size=40))
-def test_banded_self_join_equals_naive_or_scan(spark, rows):
-    """banded_self_join must produce EXACTLY the pairs agreeing on
-    any band, each exactly once (the first-matching-band branches are
-    disjoint and complete) — compared against a naive Python scan."""
-    from immoeliza_pipeline_spark.operators.dedup import banded_self_join
-    data = [(i, b0, b1, b2) for i, (b0, b1, b2) in enumerate(rows)]
-    df = spark.createDataFrame(data, "id long, band0 int, band1 int, band2 int")
-    out = banded_self_join(
-        df, ["band0", "band1", "band2"], "id",
-        lambda a, b: [F.col(f"{a}.id").alias("id1"),
-                      F.col(f"{b}.id").alias("id2")]).collect()
-    got = [(r.id1, r.id2) for r in out]
-    expected = {(a[0], b[0]) for a in data for b in data
-                if a[0] < b[0] and any(a[k] == b[k] for k in (1, 2, 3))}
+def test_banded_self_join_equals_naive_or_scan(spark, shape, rows):
+    """Both banded join shapes must produce EXACTLY the pairs
+    agreeing on any band, each exactly once (the first-matching-band
+    predicate is disjoint and complete) — compared against a naive
+    Python scan."""
+    got, expected = _banded_pairs(
+        spark, [(i, *r) for i, r in enumerate(rows)], shape)
     assert set(got) == expected
-    assert len(got) == len(expected)  # disjoint branches: no dup pairs
+    assert len(got) == len(expected)  # first match only: no dup pairs
 
 
 @settings(max_examples=5, deadline=None)
@@ -127,27 +158,20 @@ def test_sequence_packing_is_contiguous(spark, token_counts):
         acc += r.n_tokens
 
 
+@pytest.mark.parametrize("shape", ["self", "probe"])
 @settings(max_examples=5, deadline=None)
 @given(st.lists(st.tuples(st.one_of(st.none(), st.integers(0, 2)),
                           st.one_of(st.none(), st.integers(0, 2)),
                           st.one_of(st.none(), st.integers(0, 2))),
                 min_size=2, max_size=40))
-def test_banded_self_join_null_bands(spark, rows):
+def test_banded_self_join_null_bands(spark, shape, rows):
     """The NULL-band regression property (this exclusion logic was
     wrong twice: plain != null-rejects whole branches, ~eqNullSafe
     treats NULL=NULL as 'already matched'): with nullable bands, the
     result must be exactly the pairs sharing ≥1 NON-NULL equal band
     (SQL equality never matches NULL), each exactly once."""
-    from immoeliza_pipeline_spark.operators.dedup import banded_self_join
-    data = [(i, b0, b1, b2) for i, (b0, b1, b2) in enumerate(rows)]
-    df = spark.createDataFrame(data, "id long, band0 int, band1 int, band2 int")
-    got = [(r.id1, r.id2) for r in banded_self_join(
-        df, ["band0", "band1", "band2"], "id",
-        lambda a, b: [F.col(f"{a}.id").alias("id1"),
-                      F.col(f"{b}.id").alias("id2")]).collect()]
-    expected = {(a[0], b[0]) for a in data for b in data
-                if a[0] < b[0]
-                and any(a[k] is not None and a[k] == b[k] for k in (1, 2, 3))}
+    got, expected = _banded_pairs(
+        spark, [(i, *r) for i, r in enumerate(rows)], shape)
     assert set(got) == expected
     assert len(got) == len(expected)
 

@@ -3,6 +3,7 @@
 #   tests, oracle parity at two scale factors, hostile-timezone
 #   parity, the weekly DAG's published outputs checked against
 #   perfbench/expected.json, and the benchmark diffed against BASELINE.md.
+#   The package size (tools/loc.py) is printed as a report, not a gate.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -22,6 +23,9 @@ echo "== weekly DAG publishes its expected outputs =="
 last=$(python3 perfbench/run.py --workload weekly_dag --seed 1 --seconds 1 \
     --trace 0 | tail -n 1)
 grep -q '"correct": true' <<<"$last"
+
+echo "== package size (report only) =="
+python tools/loc.py
 
 echo "== bench vs baseline =="
 python bench.py | python tools/bench_compare.py
